@@ -3088,60 +3088,58 @@ QUERIES["e6_active_users"] = q_e6_active_users
 # and the local oracle replica (tools/check_correctness.py), but only
 # window entries get the driver's independent hash verdict.  To keep
 # that verdict honest across a 200+-entry registry, the window ROTATES
-# each round.  Round 14 continues the r13 rotation schedule:
-#   * the complete 13-entry r9-verdict band deferred last round
-#     (8 of t's 12, st1/st2/st3, w10, w4) — at r14 these are the
-#     oldest verdicts in the registry and the staleness SLO
-#     (test_registry_staleness_slo, current-4 = r10) requires them
-#     in-window,
-#   * 35 of the 46-entry r10 band, chosen for family breadth and for
-#     round-14 changed paths (the x-tier entries whose shared
-#     ``ivf_assign`` Arrow pass changes this round — x2, x4, x11,
-#     x14, x15 — stay in; the 11 left out are the band's most
-#     family-redundant members: 8 of x's 13 slots, a2/a3 of a's 5,
-#     p4 of p's 5; they rotate in at r15 alongside the r11 band),
-#   * family-coverage fills c2_curate and e1_funnel — the
-#     oldest-verdict members of the two families (c, e) with no
-#     r9/r10-band member; test_driver_window_covers_every_family pins
-#     all 16 families in-window.
-# (The r13 comment here previously announced an "r13 newborn
-# st27_stream_active_users" — that entry was never actually built or
-# registered; no such query exists in the registry or any replica
-# sweep, so there is no newborn intake this round.)
-# ALL entries additionally hold a same-round builder replica green in
-# the committed full-registry sweep (plans/r14/).
-_WINDOW_R14 = (
-    # the complete 13-entry r9-stale band
+# each round.  Round 15 (staleness SLO bound: current-4 = r11):
+#   * the complete 11-entry r10-verdict band deferred at r14 (a2/a3,
+#     p4, 8 of x's 13) — now the oldest verdicts in the registry and
+#     stale unless in-window (test_registry_staleness_slo),
+#   * the 13-entry r9 band (8 of t's 12, st1/st2/st3, w10, w4):
+#     re-verified at r14, but test_driver_window_covers_every_family
+#     pins it in-window,
+#   * 24 of the 45-entry r11 band, picked round-robin by family for
+#     breadth: each r11 family's first two members in registry order,
+#     plus a third from the two largest (h, t).  The 21 left out
+#     rotate in at r16, when the SLO bound reaches r11: a12/a15/a19,
+#     h14/h16/h17/h18/h19/h21/h22, j6/j7, m5/m7, st8/st9/st10,
+#     t23/t25/t9, w13,
+#   * family-coverage fills c1_dup_clusters (r13) and e2_retention
+#     (r12) — the oldest-verdict members of the two families (c, e)
+#     with no r10/r11-band member; the family test pins all 16
+#     families in-window.
+_WINDOW_R15 = (
+    # the complete 11-entry r10-stale band
+    "a2_consistency", "a3_flag_domain", "p4_apply_flags",
+    "x13_negative_sample", "x16_mmr_rerank", "x17_knn_after_delete",
+    "x19_ivfpq_residual", "x3_knn_persisted", "x5_knn_index_append",
+    "x8_pq_index", "x9_filtered_knn",
+    # the 13-entry r9 band (pinned by
+    # test_driver_window_covers_every_family)
     "st1_stream_flag_counts", "st2_stream_gaps", "st3_stream_dedup",
     "t12_bpe_pairs", "t17_tfidf", "t18_unigram_nll",
     "t1_sessionize", "t2_text_stats", "t30_weighted_sample",
     "t3_quality", "t4_lang_id",
     "w10_ffill", "w4_viewer_windows",
-    # 35 of the 46-entry r10 band
-    "a18_trend", "a1_progress", "a5_axis_range",
-    "d3_simhash_pairs", "d5_embedding_dups", "d9_semantic_dedup",
-    "f5_iso_export",
-    "h15_small_qty_revenue", "h20_balance_gate",
-    "j4_skew_join",
-    "m6_phash_dedup",
-    "p10_rowid_semijoin", "p11_hide_complete",
-    "p3_filter_conjunction", "p8_flag_class_filters",
-    "s12_partitioned_roundtrip",
-    "st19_stream_sessions", "st20_stream_stratified",
-    "st21_stream_stream_join",
-    "t19_repetition", "t29_hybrid_rrf", "t41_stratified_sample",
-    "u2_flag_window", "u6_flag_approve_advance",
-    "v1_downsample", "v4_secondary_trace", "v5_check_panel",
-    "w14_bfill", "w1_assign_windows", "w8_window_range",
-    "x11_cell_stats", "x14_kmeans", "x15_recall_eval",
-    "x2_knn_ivf", "x4_radius_search",
+    # 24 of the 45-entry r11 band
+    "a9_percentiles", "a11_qc_rules",
+    "d4_ngram_jaccard", "d14_containment",
+    "f1_add_flags",
+    "h5_nation_revenue", "h4_order_priority", "h6_forecast_revenue",
+    "j1_asof_join", "j3_asof_forward",
+    "m3_media_decode", "m4_resize",
+    "p2_projection",
+    "s4_parquet_roundtrip",
+    "st4_session_windows", "st6_stream_anomalies",
+    "t10_token_budget", "t15_psi", "t20_line_dedup",
+    "u3_approve_window",
+    "v6_viewer_slice",
+    "w9_regularize", "w11_interpolate",
+    "x1_knn_bruteforce",
     # family-coverage fills (pinned by
     # test_driver_window_covers_every_family)
-    "c2_curate", "e1_funnel",
+    "c1_dup_clusters", "e2_retention",
 )
-assert len(_WINDOW_R14) == 50 and len(set(_WINDOW_R14)) == 50
-QUERIES = {k: QUERIES[k] for k in _WINDOW_R14} | {
-    k: v for k, v in QUERIES.items() if k not in _WINDOW_R14
+assert len(_WINDOW_R15) == 50 and len(set(_WINDOW_R15)) == 50
+QUERIES = {k: QUERIES[k] for k in _WINDOW_R15} | {
+    k: v for k, v in QUERIES.items() if k not in _WINDOW_R15
 }
 
 ORACLE = {

@@ -37,7 +37,8 @@ def test_driver_window_covers_every_family():
     missing = FAMILIES - in_window
     assert not missing, (
         f"families {sorted(missing)} fell out of the driver's 50-entry"
-        f" hard-check window — reorder the registry (see _WINDOW_R5)"
+        f" hard-check window — reorder the registry (see _WINDOW_R15"
+        f" in qctimeseries_spark/queries.py)"
     )
     # round-14 rotation: the window holds the complete r9-stale band
     # (the oldest driver verdicts in the registry at r14).  This pin
