@@ -860,113 +860,3 @@ def pack_sequences(
         (last > first).alias("crosses_boundary"),
     )
 
-
-def pack_materialize(
-    df: DataFrame,
-    *,
-    key_col: str,
-    text_col: str,
-    ctx_len: int,
-    shard_col: str | None = None,
-) -> DataFrame:
-    """Materialize the packed sequences :func:`pack_sequences` lays
-    out: concatenate documents per shard in ``key_col`` order and emit
-    one row per ``ctx_len``-token context window — the actual
-    pre-training loader step (t39 answers "where does each doc land";
-    this emits the sequences themselves).
-
-    Each document splits into at most ``1 + n/ctx_len`` FRAGMENTS (one
-    per window it touches — row-local slicing of the let-bound token
-    array), fragments shuffle once on (shard, seq_id), and each
-    sequence reassembles by fragment offset.  Every sequence except a
-    shard's last holds exactly ``ctx_len`` tokens.  Work is linear in
-    corpus tokens; no global sort (the per-shard prefix sum is the t39
-    window), no sequence ever built inside a single giant row beyond
-    ``ctx_len`` tokens.
-
-    Returns ``(shard?, seq_id, n_tokens, text)``.
-    """
-    from qctimeseries_spark.datapipe.hashing import bind
-    from qctimeseries_spark.datapipe.text import tokens
-
-    if ctx_len <= 0:
-        raise ValueError("ctx_len must be positive")
-    parts = [shard_col] if shard_col is not None else []
-    base = df.select(
-        *parts, F.col(key_col), tokens(F.col(text_col)).alias("_tk")
-    ).withColumn("_n", F.size("_tk").cast("long"))
-    w = (
-        Window.partitionBy(*parts)
-        .orderBy(F.col(key_col).asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    start = (F.sum("_n").over(w) - F.col("_n")).alias("_start")
-    staged = base.select(*parts, "_tk", "_n", start)
-    # the windows this doc touches: floor(start/ctx) .. floor((end-1)/ctx)
-    first = F.floor(F.col("_start") / ctx_len).cast("bigint")
-    last = F.floor((F.col("_start") + F.col("_n") - 1) / ctx_len).cast(
-        "bigint"
-    )
-    frags = staged.filter(F.col("_n") > 0).select(
-        *parts,
-        "_start",
-        F.explode(
-            bind(
-                F.col("_tk"),
-                lambda tk: F.transform(
-                    F.sequence(first, last),
-                    lambda s: F.struct(
-                        s.alias("seq_id"),
-                        # fragment offset INSIDE the sequence
-                        F.greatest(
-                            F.col("_start") - s * ctx_len, F.lit(0).cast("bigint")
-                        ).alias("off"),
-                        F.concat_ws(
-                            " ",
-                            F.slice(
-                                tk,
-                                (
-                                    F.greatest(
-                                        s * ctx_len, F.col("_start")
-                                    )
-                                    - F.col("_start")
-                                    + 1
-                                ).cast("int"),
-                                (
-                                    F.least(
-                                        (s + 1) * ctx_len,
-                                        F.col("_start") + F.col("_n"),
-                                    )
-                                    - F.greatest(
-                                        s * ctx_len, F.col("_start")
-                                    )
-                                ).cast("int"),
-                            ),
-                        ).alias("frag"),
-                        (
-                            F.least(
-                                (s + 1) * ctx_len,
-                                F.col("_start") + F.col("_n"),
-                            )
-                            - F.greatest(s * ctx_len, F.col("_start"))
-                        ).cast("long").alias("frag_n"),
-                    ),
-                ),
-            )
-        ).alias("_f"),
-    )
-    return (
-        frags.groupBy(*parts, F.col("_f.seq_id").alias("seq_id"))
-        .agg(
-            F.sum("_f.frag_n").alias("n_tokens"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("_f.off", "_f.frag"))
-                    ),
-                    lambda s: s["frag"],
-                ),
-                " ",
-            ).alias("text"),
-        )
-    )

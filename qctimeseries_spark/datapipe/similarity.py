@@ -24,18 +24,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from qctimeseries_spark.datapipe.dedup import cosine
-
-
-def _norm(v: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
 
 
 #: cap for :func:`auto_nlist` — √n keeps mean cell size = √n (the

@@ -17,8 +17,13 @@ engine's own update ops — so the seed itself exercises U1 semantics.
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import tempfile
+from collections import Counter
+from collections.abc import Iterable, Mapping
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -3083,64 +3088,68 @@ QUERIES["st26_stream_ohlc"] = q_st26_stream_ohlc
 QUERIES["e6_active_users"] = q_e6_active_users
 
 
-# The driver harness hash-checks at most the FIRST 50 registry
-# entries; every entry outside that window is still checked by pytest
-# and the local oracle replica (tools/check_correctness.py), but only
-# window entries get the driver's independent hash verdict.  To keep
-# that verdict honest across a 200+-entry registry, the window ROTATES
-# each round.  Round 15 (staleness SLO bound: current-4 = r11):
-#   * the complete 11-entry r10-verdict band deferred at r14 (a2/a3,
-#     p4, 8 of x's 13) — now the oldest verdicts in the registry and
-#     stale unless in-window (test_registry_staleness_slo),
-#   * the 13-entry r9 band (8 of t's 12, st1/st2/st3, w10, w4):
-#     re-verified at r14, but test_driver_window_covers_every_family
-#     pins it in-window,
-#   * 24 of the 45-entry r11 band, picked round-robin by family for
-#     breadth: each r11 family's first two members in registry order,
-#     plus a third from the two largest (h, t).  The 21 left out
-#     rotate in at r16, when the SLO bound reaches r11: a12/a15/a19,
-#     h14/h16/h17/h18/h19/h21/h22, j6/j7, m5/m7, st8/st9/st10,
-#     t23/t25/t9, w13,
-#   * family-coverage fills c1_dup_clusters (r13) and e2_retention
-#     (r12) — the oldest-verdict members of the two families (c, e)
-#     with no r10/r11-band member; the family test pins all 16
-#     families in-window.
-_WINDOW_R15 = (
-    # the complete 11-entry r10-stale band
-    "a2_consistency", "a3_flag_domain", "p4_apply_flags",
-    "x13_negative_sample", "x16_mmr_rerank", "x17_knn_after_delete",
-    "x19_ivfpq_residual", "x3_knn_persisted", "x5_knn_index_append",
-    "x8_pq_index", "x9_filtered_knn",
-    # the 13-entry r9 band (pinned by
-    # test_driver_window_covers_every_family)
-    "st1_stream_flag_counts", "st2_stream_gaps", "st3_stream_dedup",
-    "t12_bpe_pairs", "t17_tfidf", "t18_unigram_nll",
-    "t1_sessionize", "t2_text_stats", "t30_weighted_sample",
-    "t3_quality", "t4_lang_id",
-    "w10_ffill", "w4_viewer_windows",
-    # 24 of the 45-entry r11 band
-    "a9_percentiles", "a11_qc_rules",
-    "d4_ngram_jaccard", "d14_containment",
-    "f1_add_flags",
-    "h5_nation_revenue", "h4_order_priority", "h6_forecast_revenue",
-    "j1_asof_join", "j3_asof_forward",
-    "m3_media_decode", "m4_resize",
-    "p2_projection",
-    "s4_parquet_roundtrip",
-    "st4_session_windows", "st6_stream_anomalies",
-    "t10_token_budget", "t15_psi", "t20_line_dedup",
-    "u3_approve_window",
-    "v6_viewer_slice",
-    "w9_regularize", "w11_interpolate",
-    "x1_knn_bruteforce",
-    # family-coverage fills (pinned by
-    # test_driver_window_covers_every_family)
-    "c1_dup_clusters", "e2_retention",
-)
-assert len(_WINDOW_R15) == 50 and len(set(_WINDOW_R15)) == 50
-QUERIES = {k: QUERIES[k] for k in _WINDOW_R15} | {
-    k: v for k, v in QUERIES.items() if k not in _WINDOW_R15
-}
+def driver_window(
+    names: Iterable[str], passed: Mapping[int, Iterable[str]], size: int = 50
+) -> list[str]:
+    """The ``size`` registry entries the driver should hash-check next.
+
+    ``names`` is the registry in declaration order and ``passed`` maps
+    each driver round to the entries that passed in it.  Entries come
+    oldest latest pass first (never passed counts as round 0; ties keep
+    declaration order).  Then each family missing from the window swaps
+    in its oldest member for the youngest pick of a family holding more
+    than one slot.  With no records the window is the first ``size``
+    names.
+    """
+    names = list(names)
+    if not passed:
+        return names[:size]
+    latest = dict.fromkeys(names, 0)
+    for rnd, ok in passed.items():
+        for n in ok:
+            if n in latest:
+                latest[n] = max(latest[n], rnd)
+    order = sorted(names, key=latest.__getitem__)
+    window = order[:size]
+
+    def family(n: str) -> str:
+        return re.match(r"[a-z]+", n).group(0)
+
+    for n in order[size:]:  # each family's first hit is its oldest
+        counts = Counter(map(family, window))
+        if counts[family(n)]:
+            continue
+        shared = [m for m in window if counts[family(m)] > 1]
+        if not shared:
+            break
+        window.remove(shared[-1])
+        window.append(n)
+    return window
+
+
+def committed_passes() -> dict[int, set[str]]:
+    """Per-round passing entries from the ``CORRECTNESS_r*.json`` driver
+    records beside the package (none in an installed copy)."""
+    passed = {}
+    for p in Path(__file__).resolve().parents[1].glob("CORRECTNESS_r*.json"):
+        passed[int(re.search(r"r(\d+)", p.name).group(1))] = {
+            n
+            for n, v in json.loads(p.read_text()).items()
+            if v.get("rows_match")
+            and v.get("schema_match") is not False
+            and v.get("hash_match") in (True, None)
+        }
+    return passed
+
+
+# The driver harness hash-checks only the first 50 registry entries;
+# every entry is still checked by pytest and the local oracle replica
+# (tools/check_correctness.py).  The registry leads with the window the
+# committed driver records call for, so the window moves as they land.
+DECLARED = tuple(QUERIES)
+QUERIES = {
+    k: QUERIES[k] for k in driver_window(DECLARED, committed_passes())
+} | QUERIES
 
 ORACLE = {
     "f1_add_flags": f"""

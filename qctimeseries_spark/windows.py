@@ -1072,18 +1072,10 @@ def shift_global(
     block_last = src.groupBy("_blk").agg(
         F.max_by(row_struct, F.col(time_col)).alias("_bl")
     )
-    carry = (
-        src.select("_blk").distinct()
-        .join(block_last, "_blk", "left")
-        .withColumn(
-            "_carry",
-            F.last(F.col("_bl"), ignorenulls=True).over(
-                Window.orderBy("_blk").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-            ),
-        )
-        .select("_blk", "_carry")
+    # block_last holds only non-empty blocks, so the previous row is
+    # the nearest earlier non-empty block's last row
+    carry = block_last.select(
+        "_blk", F.lag("_bl").over(Window.orderBy("_blk")).alias("_carry")
     )
     out = src.join(F.broadcast(carry), "_blk")
     prev = F.when(F.col("_rn") == 1, F.col("_carry")).otherwise(

@@ -26,32 +26,71 @@ def _family(name: str) -> str:
     return m.group(1)
 
 
+def _passes_by_round() -> dict[int, set[str]]:
+    """The committed driver records: round -> entries that passed."""
+    import json
+
+    passed = {}
+    for p in REPO.glob("CORRECTNESS_r*.json"):
+        passed[int(re.search(r"r(\d+)", p.name).group(1))] = {
+            name
+            for name, v in json.loads(p.read_text()).items()
+            if v.get("rows_match")
+            and v.get("schema_match") is not False
+            and v.get("hash_match") in (True, None)
+        }
+    return passed
+
+
 def test_driver_window_covers_every_family():
-    from qctimeseries_spark.queries import ORACLE, QUERIES
+    from qctimeseries_spark.queries import (
+        DECLARED, ORACLE, QUERIES, driver_window,
+    )
 
     names = list(QUERIES)
     assert len(QUERIES) == len(ORACLE)
     assert set(QUERIES) == set(ORACLE)
+    assert sorted(DECLARED) == sorted(names)
     assert {_family(n) for n in names} == FAMILIES  # no unknown family
     in_window = {_family(n) for n in names[:50]}
     missing = FAMILIES - in_window
     assert not missing, (
         f"families {sorted(missing)} fell out of the driver's 50-entry"
-        f" hard-check window — reorder the registry (see _WINDOW_R15"
-        f" in qctimeseries_spark/queries.py)"
+        f" hard-check window (see driver_window in"
+        f" qctimeseries_spark/queries.py)"
     )
-    # round-14 rotation: the window holds the complete r9-stale band
-    # (the oldest driver verdicts in the registry at r14).  This pin
-    # asserts the priority tier CANNOT silently fall out.
-    window = set(names[:50])
-    assert {
-        # the complete 13-entry r9-verdict band rotated in
-        "st1_stream_flag_counts", "st2_stream_gaps", "st3_stream_dedup",
-        "t12_bpe_pairs", "t17_tfidf", "t18_unigram_nll",
-        "t1_sessionize", "t2_text_stats", "t30_weighted_sample",
-        "t3_quality", "t4_lang_id",
-        "w10_ffill", "w4_viewer_windows",
-    } <= window
+    # the registry leads with the window the committed records call for
+    assert names[:50] == driver_window(DECLARED, _passes_by_round())
+
+
+def test_driver_window_rule():
+    """driver_window on synthetic records: oldest latest pass first,
+    never-verified first, ties in declaration order, the family fill,
+    and declaration order when there are no records."""
+    from qctimeseries_spark.queries import driver_window
+
+    names = ["a1_x", "a2_x", "a3_x", "b1_x", "b2_x", "c1_x"]
+    assert driver_window(names, {}, 3) == ["a1_x", "a2_x", "a3_x"]
+    # a3 never passed (round 0); b1 r1; a1/c1 tie at r2 in declaration
+    # order; a2 r3, b2 r4
+    passed = {1: {"b1_x", "a2_x"}, 2: {"a1_x", "c1_x"}, 3: {"a2_x"},
+              4: {"b2_x"}, 9: {"gone1_x"}}
+    assert driver_window(names, passed, 6) == [
+        "a3_x", "b1_x", "a1_x", "c1_x", "a2_x", "b2_x",
+    ]
+    assert driver_window(names, passed, 4) == [
+        "a3_x", "b1_x", "a1_x", "c1_x",
+    ]
+    # top 3 is a3, b1, a1: c is missing, so its oldest member (c1)
+    # replaces the youngest pick of a shared family (a1)
+    assert driver_window(names, passed, 3) == ["a3_x", "b1_x", "c1_x"]
+    # two missing families fill in age order; fills never evict fills
+    fam = ["a1_x", "a2_x", "a3_x", "a4_x", "c1_x", "b1_x"]
+    got = driver_window(fam, {1: {"a1_x", "a2_x", "a3_x", "a4_x"},
+                              2: {"c1_x"}, 3: {"b1_x"}}, 4)
+    assert got == ["a1_x", "a2_x", "c1_x", "b1_x"]
+    # no shared family left to evict: the window stays as ranked
+    assert driver_window(fam, {1: set(fam)}, 1) == ["a1_x"]
 
 
 def test_registry_staleness_slo():
@@ -80,21 +119,14 @@ def test_registry_staleness_slo():
     def _round(p: Path) -> int:
         return int(re.search(r"r(\d+)", p.name).group(1))
 
-    corr = sorted(REPO.glob("CORRECTNESS_r*.json"), key=_round)
-    assert corr, "no committed driver correctness records"
-    current = _round(corr[-1]) + 1
+    passed = _passes_by_round()
+    assert passed, "no committed driver correctness records"
+    current = max(passed) + 1
 
     latest_pass: dict[str, int] = {}
-    for p in corr:
-        r = _round(p)
-        for name, v in json.loads(p.read_text()).items():
-            ok = (
-                v.get("rows_match")
-                and v.get("schema_match") is not False
-                and v.get("hash_match") in (True, None)
-            )
-            if ok:
-                latest_pass[name] = max(latest_pass.get(name, 0), r)
+    for r, names in passed.items():
+        for name in names:
+            latest_pass[name] = max(latest_pass.get(name, 0), r)
 
     # birth evidence: the earliest replica sweep an entry appears in
     # (full-registry sweeps are committed every round since r12)
@@ -233,18 +265,13 @@ def test_extensions_doc_totals_match_registry():
         f"README.md registry totals drifted: expected {readme_claim!r}"
     )
     # BENCHNOTES carries a generated-style "Current state" block that
-    # must track the live registry AND the window rotation (VERDICT
-    # r10 task 8: the closing-paragraph prose counts drift per round;
-    # this block is asserted instead)
+    # must track the live registry (VERDICT r10 task 8: the
+    # closing-paragraph prose counts drift per round; this block is
+    # asserted instead)
     bn = (REPO / "BENCHNOTES.md").read_text()
     state = bn.split("## Current state")[-1]
     assert f"registry: {len(QUERIES)} queries / {len(ORACLE)} oracle-paired" in state, (
         "BENCHNOTES Current-state registry counts drifted"
-    )
-    window_head = next(iter(QUERIES))
-    assert f"driver window head: {window_head}" in state, (
-        f"BENCHNOTES Current-state window head drifted: expected "
-        f"{window_head!r} (the first registry entry IS the window head)"
     )
 
 
@@ -363,17 +390,14 @@ def test_replica_sweep_artifact_current():
 
 def test_qcsession_latency_artifact_current():
     """VERDICT r12 task 8: the QcSession interactivity budget (SURVEY
-    §7.4 risk 6 — per-event sub-second response) is a COMMITTED,
-    per-round artifact (QCSESSION_LATENCY.json, written by
+    §7.4 risk 6 — per-event sub-second response) is a COMMITTED
+    artifact (QCSESSION_LATENCY.json, written by
     tools/qcsession_latency.py --record at sf0.1), not a tool a
     reader has to run.  This pin keeps it honest: the record must
     price every required U-op with p50/p95, carry the checkpoint
-    compaction probe, and be at most ONE round old (the grace round
-    absorbs the driver-timing race where CORRECTNESS_r{N} lands
-    before the driver's own pytest run; a 2-rounds-stale artifact
-    fails)."""
+    compaction probe, and have been measured on the code it times (its
+    digest of the timed modules must match the live sources)."""
     import json
-    import re as _re
 
     rec_path = REPO / "QCSESSION_LATENCY.json"
     assert rec_path.exists(), (
@@ -394,13 +418,11 @@ def test_qcsession_latency_artifact_current():
         assert {"p50", "p95", "jobs_cold", "wall_cold"} <= set(entry)
         assert entry["p50"] <= entry["p95"]
     assert "checkpoint_wall" in rec and "post_checkpoint" in rec
-    rounds = [
-        int(_re.search(r"r(\d+)", p.name).group(1))
-        for p in REPO.glob("CORRECTNESS_r*.json")
-    ]
-    current = max(rounds) + 1
-    assert rec["round"] >= current - 1, (
-        f"QCSESSION_LATENCY.json is from round {rec['round']} but the "
-        f"in-flight round is {current} — regenerate it "
-        f"(tools/qcsession_latency.py --record)"
+    sys.path.insert(0, str(REPO / "tools"))
+    from qcsession_latency import TIMED_MODULES, sources_sha256
+
+    assert rec["sources_sha256"] == sources_sha256(), (
+        f"QCSESSION_LATENCY.json was measured on other code than the "
+        f"live {', '.join(TIMED_MODULES)} — regenerate it "
+        f"(tools/qcsession_latency.py /root/testdata/sf0.1 10 --record)"
     )

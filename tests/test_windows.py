@@ -430,24 +430,31 @@ def test_shift_global_equals_naive_lag(spark):
     from qctimeseries_spark.windows import shift_global
 
     t0 = dt.datetime(2024, 1, 1)
-    rows = [
+    dense = [
         (t0 + dt.timedelta(hours=h * 13), None if h % 5 == 0 else float(h))
         for h in range(150)
     ]
-    df = spark.createDataFrame(rows, "ts timestamp, value double")
-    got = {
-        r["ts"]: r["value_prev"]
-        for r in shift_global(
-            df, "ts", ["value"], block_hours=24.0
-        ).collect()
-    }
-    naive = {
-        r["ts"]: r["p"]
-        for r in df.withColumn(
-            "p", F.lag("value").over(W.orderBy("ts"))
-        ).collect()
-    }
-    assert got == naive
+    # gaps of up to 10 days: many 24 h blocks between two rows are empty
+    sparse = [
+        (t0 + dt.timedelta(hours=h * 7 + 240 * (h // 6)),
+         None if h % 4 == 0 else float(h))
+        for h in range(60)
+    ]
+    for rows in (dense, sparse):
+        df = spark.createDataFrame(rows, "ts timestamp, value double")
+        got = {
+            r["ts"]: r["value_prev"]
+            for r in shift_global(
+                df, "ts", ["value"], block_hours=24.0
+            ).collect()
+        }
+        naive = {
+            r["ts"]: r["p"]
+            for r in df.withColumn(
+                "p", F.lag("value").over(W.orderBy("ts"))
+            ).collect()
+        }
+        assert got == naive
 
 
 def test_qc_rules_detect_planted_defects(spark):

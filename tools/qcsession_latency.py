@@ -20,8 +20,8 @@ Usage: python tools/qcsession_latency.py [sf_dir] [events_per_cycle]
 
 from __future__ import annotations
 
+import hashlib
 import json
-import re
 import sys
 import tempfile
 import time
@@ -44,6 +44,9 @@ REQUIRED_OPS = (
     "next_redraw",
 )
 
+#: the package modules the U-ops above run through
+TIMED_MODULES = ("app.py", "updates.py", "viz.py", "windows.py", "state.py")
+
 
 def _pct(xs: list[float], q: float) -> float:
     s = sorted(xs)
@@ -51,14 +54,13 @@ def _pct(xs: list[float], q: float) -> float:
     return round(s[i], 3)
 
 
-def _current_round() -> int:
-    """The in-flight round = latest committed driver correctness
-    record + 1 (the staleness-SLO convention)."""
-    rounds = [
-        int(re.search(r"r(\d+)", p.name).group(1))
-        for p in REPO.glob("CORRECTNESS_r*.json")
-    ]
-    return (max(rounds) + 1) if rounds else 1
+def sources_sha256() -> str:
+    """SHA-256 over the modules the timed U-ops run through, in
+    ``TIMED_MODULES`` order — the record is stale once it changes."""
+    h = hashlib.sha256()
+    for name in TIMED_MODULES:
+        h.update((REPO / "qctimeseries_spark" / name).read_bytes())
+    return h.hexdigest()
 
 
 def main() -> int:
@@ -187,11 +189,9 @@ def main() -> int:
             "sf_dir": sf_dir,
             "rows": n_rows,
             "windows": sess.n_windows,
-            # the in-flight round at generation time; the freshness
-            # test allows ONE round of grace (driver-timing race: the
-            # driver may commit CORRECTNESS_r{N} before its final
-            # pytest) and fails a 2-rounds-stale artifact
-            "round": _current_round(),
+            # the timed code this record prices; the freshness test
+            # fails once any of those modules changes
+            "sources_sha256": sources_sha256(),
             "samples_per_op": SAMPLES,
             "ops": {
                 op: {
