@@ -209,7 +209,8 @@ def knn_bruteforce(
     """Exact top-k cosine neighbors per query vector.
 
     Scoring tiers (identical doubles, different physics): when the
-    query set fits under :data:`BRUTE_ARROW_MAX_QUERIES` (the design
+    query vectors share one dimension and the query set fits under
+    :data:`BRUTE_ARROW_MAX_QUERIES` (the design
     case — recall evaluation and serve batches are a handful to a few
     hundred queries) the collected query matrix rides into ONE Arrow
     pass over the corpus (each corpus vector crosses the boundary
@@ -227,7 +228,10 @@ def knn_bruteforce(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
     qrows = q.limit(BRUTE_ARROW_MAX_QUERIES + 1).collect()
-    if 0 < len(qrows) <= BRUTE_ARROW_MAX_QUERIES:
+    # the query matrix needs one dimension; ragged query vectors take
+    # the HOF tier, whose zip_with scores each mismatched pair NULL
+    dims = {len(r["qv"]) for r in qrows if r["qv"] is not None}
+    if 0 < len(qrows) <= BRUTE_ARROW_MAX_QUERIES and len(dims) <= 1:
         scored = _brute_scores_arrow(corpus, qrows, id_col, vec_col).filter(
             F.col("query_id") != F.col("neighbor_id")
         )

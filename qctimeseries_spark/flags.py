@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from qctimeseries_spark.schema import (
     DEFAULT_SUFFIX,
@@ -24,10 +25,15 @@ from qctimeseries_spark.schema import (
 )
 
 
-def _init_flag_expr(var: str) -> Column:
-    """F1 flag init: -1 where value is NULL else 0 (``R/qc_flags.R:69-73``)."""
+def _init_flag_expr(df: DataFrame, var: str) -> Column:
+    """F1 flag init: -1 where value is missing else 0
+    (``R/qc_flags.R:69-73``).  Missing is NULL, or NaN in a float
+    column — R's ``is.na()`` is TRUE for NaN too."""
+    missing = F.col(var).isNull()
+    if isinstance(df.schema[var].dataType, (T.FloatType, T.DoubleType)):
+        missing = missing | F.isnan(var)
     return (
-        F.when(F.col(var).isNull(), F.lit(FLAG_MISSING))
+        F.when(missing, F.lit(FLAG_MISSING))
         .otherwise(F.lit(FLAG_UNCHECKED))
         .cast("int")
     )
@@ -75,7 +81,7 @@ def add_flags(
         f = flag_col(v, suffix)
         if f in out.columns and not overwrite:
             continue  # keep existing flags (reference skips with a message)
-        out = out.withColumn(f, _init_flag_expr(v).alias(f, metadata=meta))
+        out = out.withColumn(f, _init_flag_expr(out, v).alias(f, metadata=meta))
     return out
 
 

@@ -2,9 +2,19 @@
 
 Reference workflow (``vignettes/overall_workflow.Rmd:329-350``,
 SURVEY.md §3.1): read → add flags → (flag rows) → progress → apply
-flags → write clean + qc.  Expressed as one lazy DataFrame chain:
-Catalyst fuses the flag init, update overlays, and masking into a
-single projection stage; only ``progress`` and the writes trigger jobs.
+flags → write clean + qc.  Expressed as one DataFrame chain: Catalyst
+fuses the flag init, update overlays, and masking into a single
+projection stage.
+
+Materialize rule: checkpoint only a frame that has a shuffle in its
+lineage AND more than one reader.  The ``rules`` stage puts windows
+and shuffles in the flagged frame's lineage, and ``progress``, the
+checks, the export writes and the state save each read it, so that
+stage ends in one lazy ``localCheckpoint``: the first action computes
+the rules once, every later one reads the blocks, and the blocks live
+as long as the frame (nothing enters the SQL CacheManager).  Without
+``rules`` the frame stays lazy — re-scanning a narrow projection costs
+less than writing a copy of the table.
 """
 
 from __future__ import annotations
@@ -51,18 +61,31 @@ def qc_pipeline(
         for var, pred in flag_predicates.items():
             flagged = set_flag(flagged, var, FLAG_MANUAL, selection=pred, suffix=suffix)
     if rules:
-        from qctimeseries_spark.rules import apply_qc_rules
+        from qctimeseries_spark.rules import _add_lags, _rule_checks
 
+        # one lag stage for every variable (grouped by block width),
+        # then one guarded -2 overlay per variable
+        depths: dict[float, dict[str, int]] = {}
+        violated: dict[str, Column] = {}
         for var, kw in rules.items():
-            before = set(flagged.columns)
-            screened = apply_qc_rules(flagged, var, time_col, **kw)
+            kw = dict(kw)
+            block_hours = kw.pop("block_hours", 24.0)
+            depth, checks = _rule_checks(var, **kw)
+            depths.setdefault(block_hours, {})[var] = depth
+            violated[var] = F.lit(False)
+            for cond in checks.values():
+                violated[var] = violated[var] | cond
+        screened, prev_cols = flagged, []
+        for block_hours, d in depths.items():
+            screened, added = _add_lags(
+                screened, time_col, d, block_hours=block_hours
+            )
+            prev_cols += added
+        for var, pred in violated.items():
             screened = set_flag(
-                screened, var, FLAG_MANUAL,
-                selection=F.col("any_rule") == 1, suffix=suffix,
+                screened, var, FLAG_MANUAL, selection=pred, suffix=suffix
             )
-            flagged = screened.drop(
-                *(set(screened.columns) - before)
-            )
+        flagged = screened.drop(*prev_cols).localCheckpoint(eager=False)
     prog = progress(flagged, vars if isinstance(vars, list) else [vars], suffix)
     clean = apply_flags(flagged, suffix=suffix, drop_flags=True)
     return flagged, clean, prog

@@ -139,8 +139,9 @@ def _events_anchor(sf_dir: str):
     - stats skip NULLs, exactly like ``F.min``.
 
     Returns None (→ the collect path) when anything is off: missing
-    stats, unexpected physical type, or a non-datetime min.  Re-read
-    from the live file every call — no result memo.
+    stats, a ``ts`` column not declared TIMESTAMP, or a unit other
+    than ms/us/ns.  Re-read from the live file every call — no result
+    memo.
     """
     import datetime as _dt
 
@@ -150,21 +151,28 @@ def _events_anchor(sf_dir: str):
         md = _pq.ParquetFile(f"{sf_dir}/events.parquet").metadata
         names = [md.schema.column(i).name for i in range(md.num_columns)]
         ti = names.index("ts")
+        lt = json.loads(md.schema.column(ti).logical_type.to_json())
+        if lt.get("Type") != "Timestamp":
+            return None
         mins = []
         for rg in range(md.num_row_groups):
             st = md.row_group(rg).column(ti).statistics
             if st is None or not st.has_min_max:
                 return None
-            mins.append(st.min)
+            mins.append(st.min_raw)
         lo = min(mins)
-        if isinstance(lo, _dt.datetime):
-            return lo
-        if isinstance(lo, int) and lo > 0:  # TIMESTAMP(NANOS) raw int
-            # engine path is `ts DIV 1000` (truncation); positive-only
-            return _dt.datetime.utcfromtimestamp(0) + _dt.timedelta(
-                microseconds=lo // 1000
-            )
-        return None
+        unit = lt.get("timeUnit")
+        if unit == "milliseconds":
+            us = lo * 1000
+        elif unit == "microseconds":
+            us = lo
+        elif unit == "nanoseconds":
+            # the engine reads nanos as `ts DIV 1000`, which truncates
+            us = abs(lo) // 1000 * (1 if lo >= 0 else -1)
+        else:
+            return None
+        epoch = _dt.datetime.fromtimestamp(0, _dt.timezone.utc)
+        return (epoch + _dt.timedelta(microseconds=us)).replace(tzinfo=None)
     except Exception:
         return None
 

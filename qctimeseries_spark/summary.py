@@ -33,11 +33,14 @@ from qctimeseries_spark.schema import (
 
 
 def _unpivot(df: DataFrame, vars: list[str], suffix: str) -> DataFrame:
-    """(variable, value, flag) long form via stack — no shuffle."""
+    """(variable, value, flag) long form via stack — no shuffle.  A NaN
+    value lands as NULL: R's ``is.na()`` counts NaN as missing."""
     pairs = []
     for v in vars:
         f = flag_col(v, suffix)
-        pairs.append(f"'{v}', cast(`{v}` as double), `{f}`")
+        pairs.append(
+            f"'{v}', nanvl(cast(`{v}` as double), null), `{f}`"
+        )
     n = len(vars)
     return df.selectExpr(
         f"stack({n}, {', '.join(pairs)}) as (variable, value, flag)"

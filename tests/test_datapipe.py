@@ -194,6 +194,34 @@ def test_knn_bruteforce_finds_planted_neighbor(vectors):
     assert out[0]["cos"] > 0.999
 
 
+def test_knn_bruteforce_ragged_queries_take_the_hof_tier(
+    vectors, spark, monkeypatch
+):
+    """Query vectors of mixed dimension cannot form the Arrow tier's
+    query matrix; they score on the HOF tier (NULL cosine for each
+    mismatched pair) with the same output as that tier forced, and
+    uniform queries keep the Arrow tier's values."""
+    from qctimeseries_spark.datapipe import similarity
+
+    schema = "query_id long, embedding array<double>"
+    uniform = [(0, [math.sin(d) for d in range(8)]),
+               (1, [math.cos(d) for d in range(8)])]
+    ragged = uniform + [(200, [1.0, 0.0, 0.0, 1.0]), (201, None)]
+
+    def run(rows):
+        q = spark.createDataFrame(rows, schema)
+        return sorted(
+            tuple(r) for r in knn_bruteforce(vectors, q, k=3).collect()
+        )
+
+    got = run(ragged)
+    arrow_uniform = run(uniform)
+    monkeypatch.setattr(similarity, "BRUTE_ARROW_MAX_QUERIES", 0)
+    assert got == run(ragged)  # the HOF tier, forced
+    assert [r for r in got if r[0] in (0, 1)] == arrow_uniform
+    assert {r[2] for r in got if r[0] in (200, 201)} == {None}
+
+
 def test_knn_ivf_recall_vs_bruteforce(vectors):
     queries = vectors.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), "embedding"

@@ -426,3 +426,26 @@ def test_qcsession_latency_artifact_current():
         f"live {', '.join(TIMED_MODULES)} — regenerate it "
         f"(tools/qcsession_latency.py /root/testdata/sf0.1 10 --record)"
     )
+
+
+@pytest.mark.parametrize("unit", ["ms", "us", "ns"])
+def test_events_anchor_reads_declared_timestamp_unit(tmp_path, unit):
+    """The footer-statistics anchor converts by the column's declared
+    parquet unit; a ``ts`` that is not a TIMESTAMP gives None."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from qctimeseries_spark.queries import _events_anchor
+
+    lo = dt.datetime(2024, 1, 1, 0, 0, 7, 179000)
+    ts = [lo + dt.timedelta(hours=h) for h in (3, 0, 5)]
+    path = tmp_path / "events.parquet"
+    pq.write_table(pa.table({"ts": pa.array(ts, pa.timestamp(unit))}), path)
+    assert _events_anchor(str(tmp_path)) == lo
+    pq.write_table(
+        pa.table({"ts": pa.array([int(t.timestamp()) for t in ts], pa.int64())}),
+        path,
+    )
+    assert _events_anchor(str(tmp_path)) is None
